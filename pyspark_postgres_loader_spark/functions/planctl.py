@@ -71,29 +71,3 @@ def spread(df: DataFrame) -> DataFrame:
         return df
     return df.repartition(target)
 
-
-def presentation_sort(df: DataFrame, *cols: str) -> DataFrame:
-    """Total-order presentation sort that does NOT re-execute an
-    expensive child for range-boundary sampling.
-
-    ``orderBy`` plans an ``Exchange rangepartitioning`` whose
-    ``RangePartitioner`` runs a full extra pass over its child RDD to
-    sketch split boundaries. When the child is a narrow pipeline (no
-    shuffle between it and the sort) the whole pipeline executes
-    TWICE — for the decode walks that means every payload decodes
-    twice per query. Staging a hash exchange on the sort key first
-    means the sampler reads the materialized shuffle output (tiny fact
-    rows) instead of re-running the decode: the heavy work runs once,
-    and both exchanges move only ~tens of bytes per row. Measured at
-    sf0.1 (r15): ingest_gzip_member_walk 0.69→0.46 s,
-    quality_char_diversity 3.30→1.51 s, identical rows and row order.
-
-    At 100 TB the argument is the same but stronger: re-decoding the
-    corpus for a sampling pass is a second full pass over the data,
-    while the staged exchange shuffles only the per-row fact columns
-    (guide §2.3 — shuffle keys and metadata, not payloads, applied to
-    the range sampler). Use ``df.transform(presentation_sort, "k")``
-    in place of ``df.orderBy("k")`` wherever the sort key list is a
-    plain ascending column list; sort semantics are unchanged.
-    """
-    return df.repartition(*cols).orderBy(*cols)

@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .mp3 import crc16_mp3
 
 # sampling_frequency_index → Hz (13818-7 table; 13..14 reserved,
@@ -343,4 +342,4 @@ def audio_aac_adts_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "channels int, n_frames int, total_samples long, "
             "duration_us long, frame_bytes long, payload_wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 # the standard IMA step-size table (89 entries) and index adjustments
 _STEPS = [
@@ -340,4 +339,4 @@ def audio_adpcm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_samples int, "
             "sample_sum long, wsample_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

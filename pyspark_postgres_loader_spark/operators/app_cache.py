@@ -10,10 +10,10 @@ applicationId so a DataFrame never leaks across sessions (the
 driver's vanilla rehearsal and a fresh bench process get fresh ids
 and rebuild); fixture inputs never change under a live session, so
 entries cannot go stale. Entries from dead sessions are evicted on
-the next build (r10 ADVICE precedent), unpersisting their
-checkpointed blocks when the owning context is still alive
-(r15 ADVICE: eviction used to drop the dict entry but leak the
-RDD blocks of a same-JVM predecessor session).
+the next build (r10 ADVICE precedent). Eviction only drops the
+reference: ``unpersist`` is a no-op on a ``localCheckpoint``ed
+DataFrame, so the checkpoint blocks are freed with the dead context,
+or by Spark's ContextCleaner once the evicted DataFrame is garbage.
 
 Build cost is recorded per substrate in ``BUILD_LOG`` (name →
 seconds, most recent build wins) so bench.py can surface substrate
@@ -41,18 +41,14 @@ def app_scoped(
     build: Callable[[], DataFrame],
 ) -> DataFrame:
     """Return the memoized eager localCheckpoint of ``build()`` for
-    ``key_tail`` under the CURRENT Spark application, evicting
-    (and unpersisting) entries left by dead sessions."""
+    ``key_tail`` under the CURRENT Spark application, dropping the
+    references left by dead sessions."""
     app_id = spark.sparkContext.applicationId
     key = (app_id,) + key_tail
     df = cache.get(key)
     if df is None:
         for stale in [k for k in cache if k[0] != app_id]:
-            old = cache.pop(stale)
-            try:  # release the checkpoint blocks if the old context
-                old.unpersist()  # is this same JVM; a stopped context
-            except Exception:  # noqa: BLE001 — already freed everything
-                pass
+            del cache[stale]
         t0 = time.perf_counter()
         df = build().localCheckpoint(eager=True)
         BUILD_LOG["/".join(str(p) for p in key_tail)] = round(

@@ -53,7 +53,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .lz4frame import decompress_lz4_frame
 from .zstdfse import decompress_frame
 
@@ -565,4 +564,4 @@ def ingest_arrow_ipc_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_batches int, n_rows long, "
             "id_sum long, val_sum long, n_nulls long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

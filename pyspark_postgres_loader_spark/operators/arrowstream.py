@@ -54,7 +54,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .arrowipc import (
     _HDR_DICTIONARY,
     _HDR_RECORD_BATCH,
@@ -356,4 +355,4 @@ def ingest_arrow_ipc_stream_walk(
             "doc_id long, status string, n_batches int, n_rows long, "
             "id_sum long, val_sum long, n_nulls long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

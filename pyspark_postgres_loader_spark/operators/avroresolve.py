@@ -47,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import (
     _AVRO_MAGIC,
     _decode_block_data,
@@ -469,4 +468,4 @@ def ingest_avro_schema_resolution(
             "doc_id long, status string, n_records long, id_sum long, "
             "val_sum long, name_len_sum long, bonus_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -56,7 +56,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import (
     _decode_node,
     _record_fields,
@@ -408,4 +407,4 @@ def ingest_avro_single_object(
             "n_metric long, id_sum long, val_sum long, "
             "name_len_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -589,16 +589,10 @@ def ingest_avro_container_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 13 == 5).cast("int"),
         (F.col("doc_id") % 19 == 7).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _av_batches,
         schema=(
             "doc_id long, status string, n_blocks int, n_records long, "
             "id_sum long, val_sum long, name_len_sum long"
         ),
     )
-    # presentation sort WITHOUT a global orderBy: rangepartitioning
-    # SAMPLES its child, which re-executes the whole decode subtree
-    # (measured 3.1 s vs 1.4 s per pass at sf0.1); a single-partition
-    # exchange + in-partition sort materializes the 60 kB fact rows
-    # once and sorts them in one task
-    return out.repartition(1).sortWithinPartitions("doc_id")

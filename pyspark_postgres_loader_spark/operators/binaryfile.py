@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..scratch import claim_scratch_dir
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .parquetwalk import (
     _PQ_GROUPS,
     _PQ_ROWGROUP,
@@ -204,7 +203,7 @@ def ingest_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "file_name string, status string, n_row_groups int, "
             "n_pages int, n_values long, value_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "file_name")
+    )
 
 
 # -------------------------------------- mixed-format dispatch leg
@@ -380,4 +379,4 @@ def ingest_binaryfile_dispatch(
             "file_name string, format string, status string, "
             "n_records long, fact_sum long"
         ),
-    ).transform(_presentation_sort, "file_name")
+    )

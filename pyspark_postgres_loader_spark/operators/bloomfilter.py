@@ -48,7 +48,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .parquetwalk import _TReader, _pq_values
 
 _MASK64 = (1 << 64) - 1
@@ -351,4 +350,4 @@ def ingest_parquet_bloom_probe(
             "id long, g int, variant string, status string, "
             "n_blocks long, nbytes long, ndv long, n_present_hits long"
         ),
-    ).transform(_presentation_sort, "id")
+    )

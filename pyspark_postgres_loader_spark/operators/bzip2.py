@@ -32,7 +32,6 @@ counterpart (SURVEY.md §2l extension).
 
 from __future__ import annotations
 
-import struct
 from typing import Iterator
 
 import pandas as pd
@@ -40,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .oggwalk import ogg_crc
 
 _BLOCK_MAGIC = 0x314159265359
@@ -425,4 +423,4 @@ def ingest_bzip2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_blocks int, "
             "content_len long, content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -38,7 +38,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _BREAK = object()
 
@@ -458,4 +457,4 @@ def ingest_cbor_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text_bytes long, bstr_bytes long, float_milli long, "
             "max_depth int"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -267,7 +267,6 @@ def cluster_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("sq_dist").cast("double") / (_MICRO * _MICRO)).alias("inertia"),
             F.min("vec_id").alias("min_vec_id"),
         )
-        .orderBy("cluster")
     )
 
 
@@ -313,7 +312,6 @@ def sample_cluster_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sq_dist").cast("double") / (_MICRO * _MICRO)).alias("sq_dist"),
             "pick_rank",
         )
-        .orderBy("cluster", "pick_rank")
     )
 
 
@@ -535,7 +533,6 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         dominated.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("cluster", "vec_id", "kept_partner", "cosine")
-        .orderBy("cluster", "vec_id")
     )
 
 

@@ -389,7 +389,6 @@ def dedup_lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("cnt") > cap, F.col("cnt")).otherwise(F.lit(0))
             ).alias("docs_in_overflow"),
         )
-        .orderBy("band")
     )
 
 
@@ -896,7 +895,6 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.count("*") - 1).cast("long").alias("n_dropped"),
         )
         .select("cluster_id", "kept_doc_id", "kept_n_chars", "n_members", "n_dropped")
-        .orderBy("cluster_id")
     )
 
 
@@ -1157,7 +1155,6 @@ def dedup_substring_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         pairs.groupBy("doc_a", "doc_b")
         .agg(F.count("*").cast("long").alias("n_shared_windows"))
-        .orderBy("doc_a", "doc_b")
     )
 
 

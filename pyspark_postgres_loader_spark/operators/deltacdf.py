@@ -247,7 +247,7 @@ def delta_cdf_fold(spark: SparkSession, nv: int) -> DataFrame:
         file_net.cast("long").alias("file_net_rows"),
         (net == file_net).cast("int").alias("consistent"),
         carried.cast("int").alias("carried_ok"),
-    ).orderBy("version")
+    )
 
 
 def _cdf_oracle() -> str:

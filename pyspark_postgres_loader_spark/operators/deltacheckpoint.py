@@ -220,7 +220,6 @@ def delta_checkpoint_fold(
             (F.col("lb0") + F.sum(F.col("ab") - F.col("rb")).over(w))
             .cast("long").alias("live_bytes"),
         )
-        .orderBy("version")
     )
 
 

@@ -129,7 +129,7 @@ def delta_snapshot_diff(spark: SparkSession, nv: int) -> DataFrame:
         "removed_rows",
         (F.col("added_rows") - F.col("removed_rows")).cast("long")
         .alias("net_rows_delta"),
-    ).orderBy("v_from", "v_to"))
+    ))
 
 
 def _dd_oracle() -> str:

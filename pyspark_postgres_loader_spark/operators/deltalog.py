@@ -245,7 +245,7 @@ def delta_snapshot_stats(
         (F.sum("ab").over(w) - F.sum("rb").over(w))
         .cast("long")
         .alias("live_bytes"),
-    ).orderBy("version")
+    )
 
 
 def _dl_oracle() -> str:

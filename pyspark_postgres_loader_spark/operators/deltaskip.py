@@ -156,7 +156,6 @@ def delta_stats_skip_fold(spark: SparkSession, nv: int) -> DataFrame:
             F.min("ok").cast("int").alias("stats_ok"),
             F.sum("nulls").cast("long").alias("null_count"),
         )
-        .orderBy("class")
     )
 
 

@@ -234,8 +234,8 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
               .withColumn("rk", F.row_number().over(w_rank))
               .withColumn("nd", F.count("*").over(
                   Window.partitionBy())))
-    return (ranked.select(
+    return ranked.select(
         "doc_id", "n_tokens", "lambda_milli", "is_target",
         F.when(F.col("rk") <= F.expr(f"(nd * {_KEEP_PCT}) DIV 100"), 1)
         .otherwise(0).cast("int").alias("selected"),
-    ).orderBy("doc_id"))
+    )

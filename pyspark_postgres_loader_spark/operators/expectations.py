@@ -138,7 +138,7 @@ def quality_expectations_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         "checked",
         "violations",
         (F.col("violations") == 0).alias("passed"),
-    ).orderBy("check_name")
+    )
 
 
 # --------------------------------------------------------------------------
@@ -244,5 +244,4 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_val",
             "max_val",
         )
-        .orderBy("column_name")
     )

@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 
 class FlacCrcError(ValueError):
@@ -754,8 +753,7 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     integrity check runs rather than being dead code).
 
     Scale notes (100 TB): Arrow-batched ``mapInPandas`` map, no
-    shuffle except the presentational final sort; ~50 bytes/row of
-    facts re-enter the JVM."""
+    shuffle; ~50 bytes/row of facts re-enter the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return d.mapInPandas(
         _flac_decode_batches,
@@ -763,7 +761,7 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, form string, layout string, status string, "
             "n_samples int, n_channels int, sample_sum long, wsample_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 # --------------------------------------- spectral features (oracled)
@@ -923,7 +921,7 @@ def audio_spectral_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, bin int, c_sum long, "
             "s_sum long, energy long"
         ),
-    ).transform(_presentation_sort, "doc_id", "bin")
+    )
 
 
 audio_spectral_bins.__doc__ = audio_spectral_bins.__doc__.format(

@@ -305,10 +305,9 @@ def audio_g711_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _g7_batches,
         schema=("doc_id long, status string, fmt string, rate long, "
                 "n_samples long, pcm_sum long, pcm_abs long, "
                 "pcm_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -160,7 +160,7 @@ def graph_pagerank_custsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("u").alias("node"),
         (F.col("u") % 2 == 1).alias("is_supplier"),
         F.col("pr").alias("rank_micros"),
-    ).orderBy("node")
+    )
 
 
 graph_pagerank_custsupp.__doc__ = graph_pagerank_custsupp.__doc__.format(k=_PR_ITERS)

@@ -43,7 +43,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _FTEXT, _FHCRC, _FEXTRA, _FNAME, _FCOMMENT = 1, 2, 4, 8, 16
 _FLG_RESERVED = 0xE0
@@ -344,4 +343,4 @@ def ingest_gzip_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_members int, total_bytes long, "
             "content_sum long, wsum long, names_len int"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import _compress_block, encode_long, walk_avro
 
 _IC_GROUPS = 8
@@ -358,4 +357,4 @@ def iceberg_manifest_snapshot(
             "n_entries long, live_files long, deleted_files long, "
             "live_rows long, live_bytes long, null_partitions long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

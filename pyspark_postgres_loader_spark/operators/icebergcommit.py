@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import encode_long, walk_avro
 from .iceberg import (
     _IC_GROUPS,
@@ -305,4 +304,4 @@ def iceberg_commit_roundtrip(
             "live_rows long, live_bytes long, null_partitions long, "
             "eq_fold int"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

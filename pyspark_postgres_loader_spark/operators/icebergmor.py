@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import encode_long, walk_avro
 from .iceberg import _avro_container, _enc_str
 
@@ -525,4 +524,4 @@ def iceberg_mor_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
             "live_rows_pre long, pos_applied long, eq_matched long, "
             "overlap_both long, live_rows_mor long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .avrowalk import encode_long, walk_avro
 from .iceberg import _avro_container, _enc_str
 
@@ -334,4 +333,4 @@ def iceberg_partition_pruning(
             "doc_id long, status string, n_manifests int, "
             "n_pruned int, n_matching_files long, matching_rows long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

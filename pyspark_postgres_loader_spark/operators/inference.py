@@ -46,7 +46,6 @@ from pyspark.sql import types as T
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _MODEL_VERSION_FAKE = "hash-projection-v1"
 _DEFAULT_DIM = 16
@@ -315,5 +314,4 @@ def inference_embed_bucket_counts(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("bucket").cast("int").alias("bucket"),
             F.col("count_f").cast("long").alias("cnt"),
         )
-        .transform(_presentation_sort, "doc_id", "bucket")
     )

@@ -31,7 +31,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 # length codes 257-285 → (base, extra bits)
 _LEN_BASE = [
@@ -413,4 +412,4 @@ def ingest_gzip_native_inflate(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_members int, "
             "content_len long, content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -329,7 +329,6 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "adc_dist"
             ),
         )
-        .orderBy("qid", "rank")
     )
 
 

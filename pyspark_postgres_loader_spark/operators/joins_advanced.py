@@ -157,7 +157,6 @@ def join_range_price_band(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_orders"),
             dsum("o_totalprice").alias("sum_price"),
         )
-        .orderBy("band")
     )
 
 
@@ -212,7 +211,6 @@ def join_skew_salted_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .groupBy("n_name")
         .agg(F.count("*").alias("n_orders"), dsum("o_totalprice").alias("sum_price"))
-        .orderBy("n_name")
     )
 
 

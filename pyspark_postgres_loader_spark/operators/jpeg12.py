@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .multimodal import (
     _ZIGZAG,
     _BitReader,
@@ -423,4 +422,4 @@ def multimodal_jpeg12_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, width int, height int, "
             "max_sample int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

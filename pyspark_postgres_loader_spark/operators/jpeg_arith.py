@@ -802,9 +802,8 @@ def multimodal_jpeg_arith_decode(
         (F.col("doc_id") % 13 == 9).cast("int"),
         (F.col("doc_id") % 17 == 4).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _ja_batches,
         schema=("doc_id long, status string, width int, height int, "
                 "px_sum long, wpx_sum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .multimodal import (
     _BitReader,
     _BitWriter,
@@ -398,4 +397,4 @@ def multimodal_jpeg_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFra
             "doc_id long, status string, width int, height int, "
             "predictor int, max_sample int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -642,7 +642,6 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from ..registry import register  # noqa: E402
 from ..tables import load_table  # noqa: E402
 from .multimodal import _YCC_BIAS, real_decode_image  # noqa: E402
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _PROG_GROUPS = 12
 
@@ -815,7 +814,7 @@ def multimodal_jpeg_progressive_decode(
             "doc_id long, status string, width int, height int, "
             "px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 # ---------------------------------- progressive + chroma subsampling
@@ -1012,7 +1011,7 @@ def multimodal_jpeg_prog420_decode(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale notes (100 TB): same Arrow-batched ``mapInPandas`` decode
     map as every codec query; ~50 B of integer facts per row re-enter
-    the JVM; final ORDER BY is driver-contract presentation."""
+    the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return d.mapInPandas(
         _p420_decode_batches,
@@ -1020,4 +1019,4 @@ def multimodal_jpeg_prog420_decode(spark: SparkSession, sf_dir: str) -> DataFram
             "doc_id long, layout string, status string, width int, "
             "height int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -284,5 +284,4 @@ def sketch_kmv_distinct_ops(
             "exact_distinct",
         )
     )
-    return (singles.unionByName(union_row).unionByName(inter_row)
-            .orderBy("scope"))
+    return singles.unionByName(union_row).unionByName(inter_row)

@@ -464,7 +464,6 @@ def _lz_oracle() -> str:
 def _register_query() -> None:
     from ..registry import register
     from ..tables import load_table
-    from ..functions.planctl import presentation_sort as _presentation_sort
 
     @register("ingest_lz4_frame_decode", oracle=_lz_oracle())
     def ingest_lz4_frame_decode(spark, sf_dir):
@@ -489,7 +488,7 @@ def _register_query() -> None:
                 "doc_id long, status string, content_len long, "
                 "content_sum long, wsum long, prefix_len int"
             ),
-        ).transform(_presentation_sort, "doc_id")
+        )
 
 
 _register_query()

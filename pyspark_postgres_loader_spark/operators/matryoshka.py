@@ -180,7 +180,6 @@ def embedding_matryoshka_recall(
                 / F.lit(_MRL_K * len(_QUERY_IDS))
             ).alias("recall"),
         )
-        .orderBy("dim")
     )
 
 

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 # bitrate tables, kbps, index 1..14 (index 0 = free format, 15 = bad)
 _BR_V1_L1 = [32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448]
@@ -486,4 +485,4 @@ def audio_mp3_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "duration_us long, bitrate_sum_kbps long, frame_bytes long, "
             "payload_wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 
 def real_decode_image(payload: bytes):
@@ -1839,7 +1838,6 @@ def multimodal_ahash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.count("*") - 1).cast("long").alias("n_dups"),
         )
         .filter(F.col("n_docs") >= 2)
-        .orderBy("ahash")
     )
 
 
@@ -2299,7 +2297,7 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, width int, height int, "
             "px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 @register("multimodal_codec_decode", oracle=_codec_oracle())
@@ -2315,8 +2313,7 @@ def multimodal_codec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale notes (100 TB): identical shape to the other decode queries —
     Arrow-batched ``mapInPandas``, decode embarrassingly parallel, only
     ~40 bytes/row of integer facts re-enter the JVM, one narrow
-    aggregation-free projection (the ORDER BY is driver-contract
-    presentation, pushed to a final sort of scalar rows)."""
+    aggregation-free projection."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return d.mapInPandas(
         _codec_decode_batches,
@@ -2324,7 +2321,7 @@ def multimodal_codec_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, codec string, status string, width int, "
             "height int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 _JPEG420_GROUPS = 12
@@ -2520,7 +2517,7 @@ def multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale notes (100 TB): Arrow-batched ``mapInPandas``, decode
     embarrassingly parallel, ~48 bytes/row of integer facts re-enter
-    the JVM; the final ORDER BY is driver-contract presentation."""
+    the JVM."""
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return d.mapInPandas(
         _jpeg420_decode_batches,
@@ -2528,7 +2525,7 @@ def multimodal_jpeg420_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, layout string, status string, width int, "
             "height int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 _JPEGR_GROUPS = 12
@@ -2680,4 +2677,4 @@ def multimodal_jpeg_restart_decode(spark: SparkSession, sf_dir: str) -> DataFram
             "doc_id long, status string, width int, height int, ri int, "
             "n_restarts int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -344,7 +344,6 @@ def ann_nsw_beam_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             (F.col("d").cast("double") / (_MICRO * _MICRO)).alias("dist"),
         )
-        .orderBy("qid", "rank")
     )
 
 
@@ -537,7 +536,6 @@ def ann_hnsw_layered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             (F.col("d").cast("double") / (_MICRO * _MICRO)).alias("dist"),
         )
-        .orderBy("qid", "rank")
     )
 
 
@@ -643,7 +641,6 @@ def ann_recall_hnsw_report(
             (F.coalesce(F.col("n_hits"), F.lit(0)).cast("double")
              / F.col("k")).alias("recall"),
         )
-        .orderBy("qid")
     )
 
 

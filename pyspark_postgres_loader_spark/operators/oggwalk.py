@@ -51,7 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _CAPTURE = b"OggS"
 _F_CONT, _F_BOS, _F_EOS = 0x01, 0x02, 0x04
@@ -385,4 +384,4 @@ def audio_ogg_page_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "payload_bytes long, content_sum long, wsum long, "
             "last_granule long, junk_skipped int"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

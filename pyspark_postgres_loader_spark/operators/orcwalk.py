@@ -59,7 +59,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .inflate import inflate_raw
 from .lz4frame import lz4_decompress_block
 from .snappy import snappy_decompress_block
@@ -1259,7 +1258,7 @@ def ingest_orc_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_rows long, a_sum long, "
             "b_sum long, c_sum long, d_sum long, e_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 # ------------------------------------- nullable (PRESENT) fixture
@@ -1421,7 +1420,7 @@ def ingest_orc_nullable_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_rows long, v_nonnull long, "
             "v_sum long, u_nonnull long, u_sum long, w_nonnull long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 # ------------------------------------------ string columns (r14)
@@ -1689,7 +1688,7 @@ def ingest_orc_string_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _os_batches,
         schema=(
             "doc_id long, status string, n_rows long, dict_cols long, "
@@ -1699,7 +1698,6 @@ def ingest_orc_string_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "snull_tagsum long, snull_wsum long"
         ),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 # --------------------------- timestamp / date / decimal (r14)
@@ -1954,14 +1952,13 @@ def ingest_orc_temporal_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _ot_batches,
         schema=("doc_id long, status string, n_rows long, "
                 "ts_sec_sum long, ts_nano_sum long, ts_wsum long, "
                 "d_nonnull long, d_sum long, d_wsum long, "
                 "dec_sum long, dec_neg long, dec_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 # --------------------------------- LIST columns (r14, embeddings)
@@ -2208,14 +2205,13 @@ def ingest_orc_list_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _ol_batches,
         schema=("doc_id long, status string, n_rows long, "
                 "n_null_lists long, n_empty_lists long, "
                 "n_null_elems long, n_values long, sum_scaled long, "
                 "wsum_scaled long, order_defects long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 # ----------------------------------- MAP compound type (round 15)
@@ -2468,14 +2464,13 @@ def ingest_orc_map_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _om_batches,
         schema=("doc_id long, status string, n_rows long, "
                 "n_null_maps long, n_empty_maps long, "
                 "n_null_vals long, n_values long, key_wsum long, "
                 "val_sum long, val_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 # -------------------------------- STRUCT compound type (round 15)
@@ -2713,14 +2708,13 @@ def ingest_orc_struct_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _ost_batches,
         schema=("doc_id long, status string, n_rows long, "
                 "n_null_structs long, n_null_a long, a_sum long, "
                 "b_scaled_sum long, n_null_s long, "
                 "s_suffix_wsum long, wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 # ----------------------------------- UNION compound type (round 15)
@@ -2960,10 +2954,9 @@ def ingest_orc_union_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _ou_batches,
         schema=("doc_id long, status string, n_rows long, n_v0 long, "
                 "n_v0_null long, v0_sum long, v0_wsum long, "
                 "n_v1 long, n_v1_null long, s_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -169,5 +169,4 @@ def dedup_corpus_paragraphs(
             .cast("int")
             .alias("keep"),
         )
-        .orderBy("doc_id")
     )

@@ -411,11 +411,10 @@ def ingest_parquet_bss_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _bs_batches,
         schema=("doc_id long, status string, n_rows long, "
                 "n_pages long, f_sum long, f_wsum long, "
                 "n_null_d long, d_sum long, d_wsum long, "
                 "h_sum long, h_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -233,14 +233,13 @@ def ingest_parquet_zstd_pages(
     nested/v2/page-index/dictionary walks inherit zstd for free."""
     d = (load_table(spark, sf_dir, "documents")
          .select("doc_id").repartition(32, "doc_id"))
-    out = d.mapInPandas(
+    return d.mapInPandas(
         _pz_batches,
         schema=(
             "doc_id long, status string, n_row_groups int, n_pages int, "
             "n_values long, value_sum long, wsum long"
         ),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 # -------------------------------------------------------- lz4_raw
@@ -410,11 +409,10 @@ def ingest_parquet_lz4_pages(
     ingest actually tunes toward."""
     d = (load_table(spark, sf_dir, "documents")
          .select("doc_id").repartition(32, "doc_id"))
-    out = d.mapInPandas(
+    return d.mapInPandas(
         _pl_batches,
         schema=(
             "doc_id long, status string, n_row_groups int, n_pages int, "
             "n_values long, value_sum long, wsum long"
         ),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -57,7 +57,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .parquetwalk import (
     _decompress,
     _PAGE_DATA,
@@ -453,4 +452,4 @@ def ingest_parquet_dictionary_walk(
             "dict_str_sum long, n_dict_pages int, n_rle_pages int, "
             "n_plain_pages int, used_fallback int"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

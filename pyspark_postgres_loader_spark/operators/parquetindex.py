@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .parquetwalk import _decompress, _read_rle_levels, _TReader
 
 _PAGE_DATA = 0
@@ -359,4 +358,4 @@ def ingest_parquet_page_index_walk(spark: SparkSession, sf_dir: str) -> DataFram
             "first_row_sum long, sum_page_min long, sum_page_max long, "
             "value_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -443,7 +443,7 @@ def ingest_parquet_legacy_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _lg_batches,
         schema=("doc_id long, status string, n_rows long, "
                 "n_pages long, n_days long, ts_dsum long, "
@@ -451,4 +451,3 @@ def ingest_parquet_legacy_walk(
                 "n_null_dec long, d18_wsum long, n_true long, "
                 "b_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -672,7 +672,7 @@ def ingest_parquet_nested_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _pn_batches,
         schema=(
             "doc_id long, status string, n_rows long, "
@@ -681,7 +681,6 @@ def ingest_parquet_nested_walk(
             "sum_scaled long, wsum_scaled long"
         ),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 # --------------------------------- the REAL embeddings file (r14)
@@ -756,11 +755,10 @@ def ingest_embeddings_real_walk(
     d = (spark.read.format("binaryFile")
          .load(_os.path.join(sf_dir, "embeddings.parquet"))
          .select("content"))
-    out = d.mapInPandas(
+    return d.mapInPandas(
         _emb_batches,
         schema="vec_id long, dim int, label int, csum long",
     )
-    return out.repartition(1).sortWithinPartitions("vec_id")
 
 
 def _doc_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -828,13 +826,12 @@ def ingest_documents_real_walk(
     d = (spark.read.format("binaryFile")
          .load(_os.path.join(sf_dir, "documents.parquet"))
          .select("content"))
-    out = d.mapInPandas(
+    return d.mapInPandas(
         _doc_batches,
         schema=("doc_id long, lang string, source string, "
                 "n_chars long, text_chars long, first_c int, "
                 "last_c int, n_e long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")
 
 
 def _ev_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -897,9 +894,8 @@ def ingest_events_real_walk(
     d = (spark.read.format("binaryFile")
          .load(_os.path.join(sf_dir, "events.parquet"))
          .select("content"))
-    out = d.mapInPandas(
+    return d.mapInPandas(
         _ev_batches,
         schema=("event_id long, user_id long, ts_us long, "
                 "event_type string, value double, props_chars long"),
     )
-    return out.repartition(1).sortWithinPartitions("event_id")

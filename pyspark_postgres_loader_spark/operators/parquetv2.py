@@ -44,7 +44,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .parquetwalk import _decompress, _parse_level_runs, _TReader
 
 # parquet physical types / encodings (parquet.thrift, public)
@@ -497,7 +496,7 @@ def ingest_parquet_v2_delta_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_row_groups int, n_pages int, "
             "n_values long, value_sum long, wsum long, str_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 # -------------------------- DELTA_LENGTH_BYTE_ARRAY (round 15)
@@ -660,10 +659,9 @@ def ingest_parquet_dlba_walk(
     memo shape as the sibling walks."""
     d = (load_table(spark, sf_dir, "documents")
          .select("doc_id").repartition(32, "doc_id"))
-    out = d.mapInPandas(
+    return d.mapInPandas(
         _dl_batches,
         schema=("doc_id long, status string, n_values long, "
                 "n_pages long, suf_sum long, suf_wsum long, "
                 "blen_sum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .inflate import inflate_raw
 from .lz4frame import lz4_decompress_block
 from .snappy import snappy_decompress_block
@@ -663,4 +662,4 @@ def ingest_parquet_native_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_row_groups int, n_pages int, "
             "n_values long, value_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -370,5 +370,4 @@ def corpus_perplexity_filter(
             "doc_id", "n_bigrams", "n_oov", "ppl_milli",
             (F.col("ppl_milli") <= F.col("t")).cast("int").alias("keep"),
         )
-        .orderBy("doc_id")
     )

@@ -301,5 +301,4 @@ def sink_copy_binary_roundtrip(
                     "n_null_amounts long, k_sum long, rnk_sum long, "
                     "floor_amount_sum long, status_len_sum long"),
         )
-        .orderBy("bucket")
     )

@@ -253,7 +253,6 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "adc_dist"
             ),
         )
-        .orderBy("qid", "rank")
     )
 
 

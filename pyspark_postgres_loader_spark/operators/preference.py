@@ -117,5 +117,4 @@ def skyline_orders_price_date(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .select("o_orderkey", "o_totalprice", "o_orderdate")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
     )

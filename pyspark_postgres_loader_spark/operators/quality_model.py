@@ -345,7 +345,6 @@ def quality_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at(names, F.col("j") + 1).alias("feature"),
             F.col("w").alias("weight_micro"),
         )
-        .orderBy("feature_idx")
     )
 
 
@@ -392,7 +391,6 @@ def quality_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("y").cast("int").alias("label_milli"),
             (p >= _KEEP_MILLI).alias("kept"),
         )
-        .orderBy("doc_id")
     )
 
 

@@ -706,7 +706,6 @@ def agg_percentiles_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ps")[2].alias("p75"),
             F.col("ps")[3].alias("p90"),
         )
-        .orderBy("o_orderstatus")
     )
 
 
@@ -827,7 +826,6 @@ def agg_stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ((s2 - s1 * s1 / n) / (n - F.lit(1))).alias("var_qty"),
             ((sxy - s1 * sp / n) / (n - F.lit(1))).alias("covar_qty_price"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -1595,7 +1593,7 @@ def agg_corr_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 16+-digit values can differ in the last ulp (~1e-16) - far
         # below the 1e-9 compare surface
         F.round(corr, 9).alias("corr_qp"),
-    ).orderBy("l_returnflag")
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -56,7 +56,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _COOKIE_RUN = 12347
 _COOKIE_NORUN = 12346
@@ -454,4 +453,4 @@ def delta_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cardinality long, min_pos long, max_pos long, "
             "pos_sum long, rows_surviving long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

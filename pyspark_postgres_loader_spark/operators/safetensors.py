@@ -51,7 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _MAX_HEADER = 100_000_000  # the spec's header cap
 
@@ -351,4 +350,4 @@ def ingest_safetensors_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_tensors int, n_elems long, "
             "n_meta int, i_sum long, f_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -465,7 +465,6 @@ def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("norm").alias("max_norm"),
             F.sum((F.col("norm") < 0.5).cast("bigint")).alias("n_degenerate"),
         )
-        .orderBy("lang")
     )
 
 
@@ -851,7 +850,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_vecs",
         F.aggregate(cvec, F.lit(0.0), lambda a, b: a + b * b).alias("norm_sq"),
         F.array_max(F.transform(cvec, F.abs)).alias("max_abs_component"),
-    ).orderBy("label")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -925,7 +924,6 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.coalesce(F.col("n_hits"), F.lit(0)).cast("double") / F.col("k")
             ).alias("recall"),
         )
-        .orderBy("query_id")
     )
 
 

@@ -327,7 +327,6 @@ def _sn_oracle() -> str:
 def _register_query() -> None:
     from ..registry import register
     from ..tables import load_table
-    from ..functions.planctl import presentation_sort as _presentation_sort
 
     @register("ingest_snappy_framed_decode", oracle=_sn_oracle())
     def ingest_snappy_framed_decode(spark, sf_dir):
@@ -355,7 +354,7 @@ def _register_query() -> None:
                 "n_compressed int, content_len long, content_sum long, "
                 "wsum long"
             ),
-        ).transform(_presentation_sort, "doc_id")
+        )
 
 
 _register_query()

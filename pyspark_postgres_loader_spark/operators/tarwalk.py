@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _BLK = 512
 
@@ -398,7 +397,7 @@ def ingest_tar_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_members int, n_samples int, "
             "total_bytes long, content_sum long, wsum long, names_len int"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 # --------------------------------------- pax / long-name oracled query
@@ -656,4 +655,4 @@ def ingest_tar_pax_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_long_names int, names_len long, total_bytes long, "
             "content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

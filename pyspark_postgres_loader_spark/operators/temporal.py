@@ -95,7 +95,6 @@ def scd2_user_state_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(nxt, F.lit(_SCD2_OPEN_END).cast("timestamp")).alias("valid_to"),
             nxt.isNull().alias("is_current"),
         )
-        .orderBy("user_id", "valid_from")
     )
 
 
@@ -174,7 +173,6 @@ def sessionize_events_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             dsum("value").alias("sum_value"),
         )
-        .orderBy("user_id", "session_seq")
     )
 
 
@@ -341,7 +339,6 @@ def timeseries_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             dsum("value").alias("volume"),
             F.count("*").cast("long").alias("n_events"),
         )
-        .orderBy("event_type", "bucket")
     )
 
 
@@ -415,7 +412,6 @@ def concurrency_gauge_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         run.groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"))
         .agg(F.max("conc").alias("max_concurrent"))
-        .orderBy("hour")
     )
 
 

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.deterministic import mhash64, sql_mhash64
-from ..functions.planctl import presentation_sort as _presentation_sort
 from ..registry import register
 from ..tables import load_table
 
@@ -474,7 +473,6 @@ def text_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             "min_chars",
             "max_chars",
         )
-        .orderBy("bucket")
     )
 
 
@@ -715,7 +713,6 @@ def text_boilerplate_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "boiler_share"
             ),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -797,7 +794,6 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _TFIDF_TOPN)
         .select("doc_id", "token", "score", "rank")
-        .orderBy("doc_id", "rank")
     )
 
 
@@ -899,4 +895,4 @@ def quality_char_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.col("len").alias("n_chars_used"),
         simpson_col.alias("simpson_diversity"),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -41,7 +41,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _POLY = 0x82F63B78  # CRC-32C reflected
 _MASK_DELTA = 0xA282EAD8
@@ -241,4 +240,4 @@ def ingest_tfrecord_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_records int, total_bytes long, "
             "content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

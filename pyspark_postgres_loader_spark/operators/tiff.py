@@ -45,7 +45,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _II, _MM = b"II", b"MM"
 _TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}  # BYTE ASCII SHORT LONG RATIONAL
@@ -632,7 +631,7 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, width int, height int, "
             "big_endian int, n_strips int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 # --------------------------------------- LZW + tiled oracled query
@@ -802,4 +801,4 @@ def multimodal_tiff_lzw_tiled_decode(
             "big_endian int, tiled int, n_chunks int, px_sum long, "
             "wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _EOW = "</w>"  # end-of-word marker (Sennrich-style)
 
@@ -361,7 +360,7 @@ def tokenizer_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     return spark.createDataFrame(
         rows, "merge_rank int, left_sym string, right_sym string, pair_count long"
-    ).orderBy("merge_rank")
+    )
 
 
 def _bpe_apply_oracle() -> str:
@@ -435,5 +434,4 @@ def tokenizer_bpe_apply_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         toks.join(serve.select("doc_id", "n_words"), "doc_id")
         .select("doc_id", "n_tokens", "n_words")
-        .transform(_presentation_sort, "doc_id")
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import udtf
 
-from ..functions.deterministic import dsum, sql_dsum
+from ..functions.deterministic import sql_dsum
 from ..registry import register
 from ..tables import load_table
 
@@ -76,7 +76,6 @@ def udtf_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM udtf_docs_in d, LATERAL bigram_explode(d.text) b
         GROUP BY b.bigram
         HAVING COUNT(*) >= 10
-        ORDER BY n DESC, bigram
         """
     )
 
@@ -176,7 +175,6 @@ def cogroup_user_activity_profile(spark: SparkSession, sf_dir: str) -> DataFrame
                 "n_orders long, order_value double"
             ),
         )
-        .orderBy("user_id")
     )
 
 

@@ -491,7 +491,6 @@ def tokenizer_unigram_train_scores(
             "piece",
             F.col("p").cast("long").alias("score_milli"),
         )
-        .orderBy("piece_rank")
     )
 
 
@@ -544,7 +543,6 @@ def tokenizer_unigram_apply_tokens(
             F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
             F.coalesce("n_words", F.lit(0)).cast("long").alias("n_words"),
         )
-        .orderBy("doc_id")
     )
 
 

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .multimodal import _decode_jpeg, build_jpeg_grey
 
 
@@ -306,7 +305,7 @@ def multimodal_video_mjpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, width int, height int, "
             "n_frames int, n_sampled int, px_sum long, wpx_sum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )
 
 
 def _frame_hash_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -412,7 +411,6 @@ def video_frame_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("canonical_doc_id"),
         )
         .filter(F.col("n_docs") >= 2)
-        .orderBy("ahash")
     )
 
 
@@ -656,4 +654,4 @@ def video_frame_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ahash_a", "ahash_b", "hamming",
         "n_docs_a", "n_docs_b",
         "canonical_doc_a", "canonical_doc_b",
-    ).orderBy("ahash_a", "ahash_b")
+    )

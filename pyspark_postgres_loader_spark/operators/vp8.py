@@ -1273,10 +1273,9 @@ def multimodal_webp_lossy_decode(
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _v8_batches,
         schema=("doc_id long, status string, width long, height long, "
                 "filter_level long, seg_enabled long, y_sum long, "
                 "u_sum long, v_sum long, y_wsum long, uv_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

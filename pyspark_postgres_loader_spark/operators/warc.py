@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _CRLF = b"\r\n"
 
@@ -304,4 +303,4 @@ def ingest_warc_record_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_records int, n_responses int, "
             "total_bytes long, content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

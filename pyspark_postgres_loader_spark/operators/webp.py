@@ -1097,10 +1097,9 @@ def multimodal_webp_lossless_decode(
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _wl_batches,
         schema=("doc_id long, status string, width long, height long, "
                 "n_pix long, r_sum long, g_sum long, b_sum long, "
                 "a_sum long, pos_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

@@ -450,10 +450,9 @@ def multimodal_webp_alpha_decode(
         (F.col("doc_id") % 11 == 3).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _wx_batches,
         schema=("doc_id long, status string, width long, height long, "
                 "filter_method long, compression long, a_sum long, "
                 "a_wsum long, y_sum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

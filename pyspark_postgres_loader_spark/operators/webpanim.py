@@ -426,10 +426,9 @@ def multimodal_webp_anim_walk(
         (F.col("doc_id") % 17 == 2).cast("int"),
         (F.col("doc_id") % 13 == 5).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _wa_batches,
         schema=("doc_id long, status string, n_frames long, "
                 "canvas_w long, canvas_h long, loop_count long, "
                 "dur_sum long, off_sum long, pix_wsum long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

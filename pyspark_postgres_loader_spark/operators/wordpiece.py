@@ -55,7 +55,6 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .tokenizer import _BPE_MAX_LEN, _BPE_MIN_LEN, _cube_free_sql
 
 _WP_MERGES = 8
@@ -421,7 +420,7 @@ def tokenizer_wordpiece_train_scores(
         rows,
         "merge_rank int, left_sym string, right_sym string, "
         "merged string, pair_count long, score_q30 long",
-    ).orderBy("merge_rank")
+    )
 
 
 @register("tokenizer_wordpiece_apply_tokens", oracle=_wp_apply_oracle())
@@ -480,4 +479,4 @@ def tokenizer_wordpiece_apply_tokens(
     return docs.mapInPandas(
         run,
         schema="doc_id long, n_words long, n_tokens long, n_unk_words long",
-    ).transform(_presentation_sort, "doc_id")
+    )

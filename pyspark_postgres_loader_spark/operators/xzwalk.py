@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _M32 = 0xFFFFFFFF
 
@@ -748,4 +747,4 @@ def ingest_xz_lzma2_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_blocks int, check_kind string, "
             "content_len long, content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -49,7 +49,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _LFH_SIG = b"PK\x03\x04"
 _CDE_SIG = b"PK\x01\x02"
@@ -395,4 +394,4 @@ def ingest_zip_member_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_entries int, total_bytes long, "
             "content_sum long, wsum long, names_len int, n_deflate int"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

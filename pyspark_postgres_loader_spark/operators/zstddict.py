@@ -51,7 +51,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 from .zstdfse import (
     _LL_DEFAULT,
     _MAX_LOG,
@@ -290,4 +289,4 @@ def ingest_zstd_dict_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, content_len long, "
             "content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -886,7 +886,6 @@ def _zf_oracle() -> str:
 def _register_query() -> None:
     from ..registry import register
     from ..tables import load_table
-    from ..functions.planctl import presentation_sort as _presentation_sort
 
     @register("ingest_zstd_compressed_decode", oracle=_zf_oracle())
     def ingest_zstd_compressed_decode(spark, sf_dir):
@@ -913,7 +912,7 @@ def _register_query() -> None:
                 "doc_id long, status string, content_len long, "
                 "content_sum long, wsum long"
             ),
-        ).transform(_presentation_sort, "doc_id")
+        )
 
 
 _register_query()

@@ -377,11 +377,10 @@ def ingest_zstd_seekable_walk(
         (F.col("doc_id") % 13 == 5).cast("int"),
         (F.col("doc_id") % 2).cast("int"),
     )
-    out = d.repartition(32, combo).mapInPandas(
+    return d.repartition(32, combo).mapInPandas(
         _sk_batches,
         schema=("doc_id long, status string, n_frames long, "
                 "has_checksum long, total_decompressed long, "
                 "b_sum long, b_wsum long, probe_frame long, "
                 "probe_byte long"),
     )
-    return out.repartition(1).sortWithinPartitions("doc_id")

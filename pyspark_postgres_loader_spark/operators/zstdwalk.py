@@ -39,7 +39,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
 from ..tables import load_table
-from ..functions.planctl import presentation_sort as _presentation_sort
 
 _MAGIC = 0xFD2FB528
 _SKIP_MAGIC_BASE = 0x184D2A50  # low nibble 0..15 all skippable
@@ -436,4 +435,4 @@ def ingest_zstd_frame_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id long, status string, n_frames int, n_skippable int, "
             "n_blocks int, total_bytes long, content_sum long, wsum long"
         ),
-    ).transform(_presentation_sort, "doc_id")
+    )

@@ -11,6 +11,13 @@ sides — per-row double arithmetic is IEEE-identical across engines, the
 decimal sum is exact and order-independent, and the final double cast is
 deterministic. Averages are ``double_sum / count`` (double division of
 identical operands). See ``functions/deterministic.py``.
+
+Row-order contract: a registered query's row order is unspecified
+unless a LIMIT or top-k sits above its sort. The oracle compare is
+order-insensitive, so a query never ends in a sort that only presents
+rows in order (each costs a range exchange plus a sampling job); the
+TPC-H ``q<N>_`` queries keep the ORDER BY of the spec text.
+``tests/test_no_cartesian_plans.py`` pins this on every batch plan.
 """
 
 from __future__ import annotations

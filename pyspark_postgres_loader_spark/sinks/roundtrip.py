@@ -244,7 +244,6 @@ def sink_upsert_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "aborted_partitions", F.lit(stats.aborted_partitions).cast("long")
         )
-        .orderBy("k")
     )
 
 
@@ -354,7 +353,7 @@ def sink_staging_merge_final_state(spark: SparkSession, sf_dir: str) -> DataFram
     )
     return out.withColumn(
         "rows_staged", F.lit(stats.rows_loaded).cast("long")
-    ).orderBy("k")
+    )
 
 
 # --------------------- async-dialect roundtrip (reference U6 + $n SQL)
@@ -521,7 +520,6 @@ def sink_async_upsert_final_state(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn(
             "aborted_partitions", F.lit(stats.aborted_partitions).cast("long")
         )
-        .orderBy("k")
     )
 
 

@@ -501,7 +501,7 @@ def _register_filetail_queries() -> None:
             .option("min_split_bytes", "1")
             .load(scratch)
         )
-        return _parse_and_aggregate(tailed).orderBy("event_type")
+        return _parse_and_aggregate(tailed)
 
     @register("stream_filetail_log_counts", oracle=_FILETAIL_ORACLE)
     def stream_filetail_log_counts(spark, sf_dir: str):
@@ -532,8 +532,7 @@ def _register_filetail_queries() -> None:
             .option("min_split_bytes", "1")
             .load(scratch)
         )
-        out = _run_to_memory(_parse_and_aggregate(stream), "complete")
-        return out.orderBy("event_type")
+        return _run_to_memory(_parse_and_aggregate(stream), "complete")
 
 
 _register_filetail_queries()

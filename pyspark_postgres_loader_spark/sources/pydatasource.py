@@ -246,7 +246,6 @@ def pysource_synthetic_events(spark, sf_dir: str):
             F.min("ts").alias("first_ts"),
             F.max("ts").alias("last_ts"),
         )
-        .orderBy("event_type")
     )
 
 

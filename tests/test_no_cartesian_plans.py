@@ -4,9 +4,19 @@ CartesianProduct. An accidental unkeyed join is O(n^2) shuffle I/O at
 broadcast (BroadcastNestedLoopJoin over a 1-row build side), which is
 a different physical node. Streaming queries are skipped: building
 their result executes the stream (plan inspection happens in their own
-plan-shape and recovery tests)."""
+plan-shape and recovery tests).
+
+The same built DataFrame also pins the row-order contract (see
+``registry``): a registered query's row order is unspecified, so below
+any top-level ``Project`` its optimized plan must not end in a ``Sort``
+— a global one costs a range exchange plus a sampling job, and a
+``repartition(1).sortWithinPartitions`` tail funnels the result through
+one task, both only to present rows in order. TPC-H ``q<N>_`` queries
+keep the ORDER BY of the spec text and are exempt."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 
@@ -14,6 +24,7 @@ from pyspark_postgres_loader_spark.registry import QUERIES, _ensure_loaded
 
 _ensure_loaded()
 BATCH_QUERIES = sorted(n for n in QUERIES if not n.startswith("stream_"))
+_TPCH = re.compile(r"q\d+_")
 
 
 @pytest.mark.parametrize("name", BATCH_QUERIES)
@@ -22,6 +33,15 @@ def test_no_cartesian_product(spark, sf_dir, name):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, (
         f"{name} plans a CartesianProduct:\n{plan[:1500]}"
+    )
+    if _TPCH.match(name):
+        return
+    top = df._jdf.queryExecution().optimizedPlan()
+    while top.nodeName() == "Project":
+        top = top.child()
+    assert top.nodeName() != "Sort", (
+        f"{name} ends in a presentation Sort; row order is "
+        f"unspecified, so drop it:\n{top.toString()[:1500]}"
     )
 
 

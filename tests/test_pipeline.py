@@ -13,7 +13,10 @@ from pyspark_postgres_loader_spark.introspection import (
     fetch_target_schema_sqlite,
     fetch_unique_key_sqlite,
 )
-from pyspark_postgres_loader_spark.pipeline import load_to_database
+from pyspark_postgres_loader_spark.pipeline import (
+    load_dataframe_to_database,
+    load_to_database,
+)
 from pyspark_postgres_loader_spark.schema_contract import (
     EmptyColumnIntersectionError,
     align_to_target,
@@ -153,3 +156,45 @@ def test_load_to_database_duckdb_dialect(spark, tmp_path):
     con.close()
     # upsert semantics: last row for id=1 wins
     assert rows == {1: (9.5, "c"), 2: (2.5, "b")}
+
+
+def test_dataframe_entry_missing_target_table_raises(spark, tmp_path):
+    """The DataFrame entry point runs the same "target has no columns"
+    check as the source entry point, instead of failing later with an
+    empty-intersection error that hides the missing table."""
+    path = str(tmp_path / "missing_df.db")
+    sqlite3.connect(path).close()
+    df = spark.createDataFrame([(1, "a")], "id int, val string")
+    with pytest.raises(ValueError, match="has no columns"):
+        load_dataframe_to_database(
+            df, "nope", functools.partial(_connect, path), dialect="sqlite"
+        )
+
+
+@pytest.mark.parametrize("entry", ["source", "dataframe"])
+def test_unknown_strategy_raises(spark, tmp_path, csv_source, entry):
+    """A misspelt strategy is an error, not a silent switch to the
+    staging merge (which has no row quarantine); nothing is written."""
+    path = str(tmp_path / "strategy.db")
+    conn = sqlite3.connect(path)
+    conn.execute("CREATE TABLE tgt (id INTEGER PRIMARY KEY, val TEXT, n INTEGER)")
+    conn.commit()
+    factory = functools.partial(_connect, path)
+    with pytest.raises(ValueError, match="unknown strategy 'batch'"):
+        if entry == "source":
+            load_to_database(
+                spark,
+                source="csv",
+                source_args={"path": csv_source, "header": "true"},
+                target_table="tgt",
+                connection_factory=factory,
+                dialect="sqlite",
+                strategy="batch",
+            )
+        else:
+            df = spark.createDataFrame([(1, "a", 10)], "id int, val string, n int")
+            load_dataframe_to_database(
+                df, "tgt", factory, dialect="sqlite", strategy="batch"
+            )
+    assert conn.execute("SELECT COUNT(*) FROM tgt").fetchone() == (0,)
+    conn.close()

@@ -96,3 +96,18 @@ def test_stream_ohlc_equals_batch_resample(spark):
     }
     # the streaming tumbling-window aggregation IS the batch resample
     assert stream == batch
+
+
+def test_stream_leaves_session_conf_unchanged(spark, sf_dir):
+    """A stream scopes its state-partition count to its own lifetime
+    and sets no state-store backend: both confs read the same before
+    and after the query runs."""
+    from pyspark_postgres_loader_spark.streaming.windows import stream_tumbling_hourly
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.stateStore.providerClass",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    assert stream_tumbling_hourly(spark, sf_dir).count() > 0
+    assert {k: spark.conf.get(k, None) for k in keys} == before

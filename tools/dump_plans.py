@@ -48,8 +48,8 @@ SHOWCASE = [
     (
         "multimodal_codec_decode",
         "round-7 decode family: ONE pruned FileScan (doc_id only) into "
-        "MapInPandas — decode is executor-side Arrow-batched Python, no "
-        "shuffle before the final presentation sort of ~40-byte fact rows",
+        "MapInPandas — decode is executor-side Arrow-batched Python and "
+        "only ~40-byte fact rows come back; no shuffle at all",
     ),
     (
         "inference_embed_bucket_counts",
@@ -118,8 +118,8 @@ SHOWCASE = [
         "ingest_xz_lzma2_decode",
         "round-11 codec family exemplar: ONE pruned FileScan (doc_id) "
         "into Arrow-batched MapInPandas — LZMA range decoding is "
-        "executor-side CPU, the only shuffle is the presentation "
-        "sort of ~60-byte fact rows; same plan shape for "
+        "executor-side CPU, ~60-byte fact rows return and nothing "
+        "shuffles; same plan shape for "
         "zip/ogg/zstd/lz4/snappy/inflate/bzip2/parquet walks",
     ),
     (
